@@ -97,8 +97,10 @@ class Block:
 
 
 # One-pass tokenizer: comments / CDATA / declarations / PIs skipped,
-# tags captured with (closing-slash, name, attrs, self-closing-slash).
-# Quoted attribute values may contain '>'.
+# tags captured with (closing-slash, name, attrs).  Quoted attribute
+# values may contain '>'.  A trailing '/' lands in the greedy attrs
+# group, so ``<br/>`` and ``<script/>`` are plain start tags: like
+# HTML5, which ignores the self-closing flag on non-void elements.
 #
 # Branch order (round 7): the TAG branch leads — it is by far the most
 # common token, and the alternatives are mutually exclusive on the
@@ -111,7 +113,7 @@ class Block:
 # over the sf corpus + adversarial + random tag-soup inputs.
 _TOKEN_RE = re.compile(
     r"<(/?)([a-zA-Z][a-zA-Z0-9:_-]*)"
-    r"([^>\"']*(?:(?:\"[^\"]*\"|'[^']*')[^>\"']*)*)(/?)>"
+    r"([^>\"']*(?:(?:\"[^\"]*\"|'[^']*')[^>\"']*)*)>"
     r"|<!--.*?(?:-->|$)"
     r"|<!\[CDATA\[.*?(?:\]\]>|$)"
     r"|<![^>]*>?"
@@ -240,7 +242,7 @@ def parse_blocks(html_text: str) -> List[Block]:
                     if link_depth > 0:
                         cur.link_chars += len(raw.strip())
                 pos = me
-                closing, tag, attr_text, selfclose = m.groups()
+                closing, tag, attr_text = m.groups()
                 if tag is None:
                     continue  # comment / CDATA / declaration / PI
                 fl = flags_get(tag)
@@ -294,16 +296,6 @@ def parse_blocks(html_text: str) -> List[Block]:
                             # per tag event vastly outnumber text-
                             # bearing blocks
                             cur.tag = "p"
-                            cur.in_boiler = boiler_depth > 0
-                elif selfclose:
-                    # ---- startend(tag) ----
-                    if fl & _F_BLOCK:
-                        if cur.chars:
-                            if cur.text:
-                                blocks.append(cur)
-                            cur = Block(tag=tag, in_boiler=boiler_depth > 0)
-                        else:
-                            cur.tag = tag
                             cur.in_boiler = boiler_depth > 0
                 elif not fl & _F_RAWTEXT:
                     # ---- start(tag, attrs) ----

@@ -95,69 +95,23 @@ def fingerprint(text: str) -> str:
     return hashlib.md5(normalized.encode("utf-8")).hexdigest()
 
 
-def _mersenne61_fold(v: np.ndarray) -> np.ndarray:
-    """Reduce uint64 values (< 2^63) towards mod 2^61-1: one fold step."""
-    return (v & np.uint64((1 << 61) - 1)) + (v >> np.uint64(61))
-
-
 def rolling_hashes(text: str, window: int = 64, base: int = 257, mod: int = (1 << 61) - 1) -> List[int]:
-    """Karp-Rabin rolling hashes over character windows (winnowing input).
-
-    Adaptive (round 7): for LONG texts the per-char Python recurrence
-    is replaced by the closed correlation form
-    h_i = Σ_j c_{i+j}·base^{w-1-j} mod p — ``window`` numpy passes over
-    the codepoint array.  That form does ``window``× more arithmetic
-    than the O(n) recurrence, so it only wins where numpy's per-element
-    throughput amortizes its per-op overhead: measured crossover on
-    this box is ~2k windows (at 300-char docs the numpy form is 7×
-    SLOWER; at 10k+ chars it is ~4× faster), hence the threshold below.
-    Exact mod-p arithmetic in uint64: each power splits into
-    (hi·2^32 + lo); c·hi < 2^50 < p so multiplying it by 2^32 mod p is
-    the Mersenne rotate-left-32, and c·lo < 2^53 adds without overflow;
-    accumulators fold each step.  Values are identical to the
-    recurrence (both compute the canonical representative in [0, p));
-    pinned by the differential suite over the sf corpus + adversarial
-    codepoints.  Generic ``mod``/``base`` overrides take the loop.
-    """
+    """Karp-Rabin rolling hashes over character windows (winnowing input):
+    h_i = Σ_j ord(text[i+j])·base^(window-1-j) mod ``mod``, by the O(n)
+    recurrence."""
     n = len(text)
     if n < window:
         return []
-    if (
-        n - window + 1 < 2048
-        or mod != (1 << 61) - 1
-        or not 2 <= base < (1 << 21)
-    ):
-        out: List[int] = []
-        h = 0
-        power = pow(base, window - 1, mod)
-        for i, c in enumerate(text):
-            h = (h * base + ord(c)) % mod
-            if i >= window:
-                h = (h - ord(text[i - window]) * power * base) % mod
-            if i >= window - 1:
-                out.append(h)
-        return out
-    p = np.uint64(mod)
-    # ord() per char == UTF-32 codepoints (always < 2^21)
-    c = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32).astype(
-        np.uint64
-    )
-    nw = n - window + 1
-    acc = np.zeros(nw, dtype=np.uint64)
-    u32, u29, u61 = np.uint64(32), np.uint64(29), np.uint64(61)
-    mask29 = np.uint64((1 << 29) - 1)
-    for j in range(window):
-        pw = pow(base, window - 1 - j, mod)
-        hi, lo = np.uint64(pw >> 32), np.uint64(pw & 0xFFFFFFFF)
-        cj = c[j : j + nw]
-        t1 = cj * hi                      # < 2^21 * 2^29 = 2^50 < p
-        # t1 * 2^32 mod p == rotate-left-32 within 61 bits (t1 < p)
-        t1 = ((t1 & mask29) << u32) | (t1 >> u29)   # < 2^61 + 2^32
-        acc += t1 + cj * lo               # term < 2^62; acc < 2^63
-        acc = _mersenne61_fold(acc)       # back under 2^61 + eps
-    acc = _mersenne61_fold(acc)
-    acc = np.where(acc >= p, acc - p, acc)
-    return [int(v) for v in acc]
+    out: List[int] = []
+    h = 0
+    power = pow(base, window - 1, mod)
+    for i, c in enumerate(text):
+        h = (h * base + ord(c)) % mod
+        if i >= window:
+            h = (h - ord(text[i - window]) * power * base) % mod
+        if i >= window - 1:
+            out.append(h)
+    return out
 
 
 def winnow(hashes: Sequence[int], w: int = 16) -> List[int]:

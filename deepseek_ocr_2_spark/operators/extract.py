@@ -55,7 +55,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.assemble import PAGE_SEPARATOR, process_page
+from ..functions.assemble import join_pages, process_page
 from ..functions.htmlmain import extract_main_content
 from ..functions.refparse import has_eos
 from .decode import (
@@ -127,29 +127,10 @@ class ExtractConfig:
     hot_host_threshold: int = 20
     static_hot_hosts: Optional[tuple] = None
     max_batch_visual_tokens: int = DEFAULT_MAX_BATCH_VISUAL_TOKENS
-    skip_incomplete_pages: bool = True  # reference skip_repeat default
-    page_separator: str = PAGE_SEPARATOR
     decode_batch: DecodeBatchFn = field(default=stub_decode_batch)
     # gate the raw model output column (reference S8/F4) — off by
     # default: at 100 TB the raw strings roughly double output bytes
     include_raw_output: bool = False
-    # Kernel-stage fan-out (guide §2.5, round-7 investigation).  When
-    # set, the payload exchange gets
-    # ``max(shuffle_parts, num_buckets // buckets_per_partition)``
-    # partitions (capped at num_buckets) instead of the default
-    # ``min(num_buckets, shuffle_parts)``.  Rationale: hashing many
-    # buckets into exactly the session parallelism concentrates
-    # (measured: largest of 32 partitions carries 1.256x the mean bytes
-    # from 1024 buckets, and in a one-wave schedule on DEDICATED cores
-    # that excess is the stage wall; 16 buckets/partition = two waves
-    # cuts the greedy makespan to 1.062x ideal).  Left None by default
-    # because the win only exists when tasks map 1:1 onto real cores:
-    # every extra mapInPandas task costs ~5-14 ms (measured, trivial
-    # kernel), and on oversubscribed hosts the OS multiplexes tasks so
-    # imbalance hides while overhead remains — measured there the
-    # fan-out is a ~4-8% LOSS.  Set ~16 on clusters with dedicated
-    # executor cores; leave None when CPU is shared.
-    buckets_per_partition: Optional[int] = None
 
 
 _COLUMNS = (
@@ -262,8 +243,8 @@ def _extract_pdf_rows(
             est_tokens += task.est_visual_tokens
             raws.append(raw)  # raw keeps even EOS-filtered pages (S8/F4)
             # Reference F2: a page without the EOS marker hit max_tokens
-            # and is dropped when skip_repeat is on.
-            if cfg.skip_incomplete_pages and not has_eos(raw):
+            # and is dropped (the reference skip_repeat default).
+            if not has_eos(raw):
                 failed += 1
                 continue
             md, elements = process_page(raw, task.width, task.height, task.page_index)
@@ -275,7 +256,7 @@ def _extract_pdf_rows(
         ok = bool(markdowns) or not pages
         out.add(
             url,
-            cfg.page_separator.join(markdowns) if ok else None,
+            join_pages(markdowns) if ok else None,
             spans,
             lang,
             "pdf",
@@ -284,7 +265,7 @@ def _extract_pdf_rows(
             est_tokens,
             ok,
             None if ok else "no_complete_pages",
-            raw=cfg.page_separator.join(raws) if raws else None,
+            raw=join_pages(raws) if raws else None,
         )
 
 
@@ -355,30 +336,27 @@ def extract_pages(
 
     ``df`` must have columns (url, html, lang); extra columns are pruned
     before the kernel so the Arrow transfer only ships what the kernel
-    reads.
+    reads.  ``repartition=False`` skips host keying and the exchange:
+    the kernel is a pure function of the row, so per-url output is the
+    same, and a stream's micro-batches are already file-sized.
     """
     cfg = cfg or ExtractConfig()
-    keyed = with_partition_key(df, cfg)
-    narrow = keyed.select("url", "html", "lang", "bucket")
     if repartition:
+        # one task wave at the session parallelism: a multi-wave
+        # fan-out measured as a 4-8% per-task-overhead loss on
+        # shared-CPU hosts
         shuffle_parts = int(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
         )
-        # Partition count: see the ``buckets_per_partition`` note on
-        # ExtractConfig — one wave at the session parallelism by
-        # default; opt-in multi-wave fan-out for dedicated-core
-        # clusters where bucket-assignment skew, not per-task overhead,
-        # sets the stage wall.
-        if cfg.buckets_per_partition:
-            nparts = max(
-                shuffle_parts, cfg.num_buckets // cfg.buckets_per_partition
-            )
-        else:
-            nparts = shuffle_parts
-        narrow = narrow.repartition(min(cfg.num_buckets, nparts), "bucket")
+        narrow = (
+            with_partition_key(df, cfg)
+            .select("url", "html", "lang", "bucket")
+            .repartition(min(cfg.num_buckets, shuffle_parts), "bucket")
+            .drop("bucket")
+        )
+    else:
+        narrow = df.select("url", "html", "lang")
     schema = (
         EXTRACT_SCHEMA_WITH_RAW if cfg.include_raw_output else EXTRACT_SCHEMA
     )
-    return narrow.drop("bucket").mapInPandas(
-        make_extract_kernel(cfg), schema=schema
-    )
+    return narrow.mapInPandas(make_extract_kernel(cfg), schema=schema)

@@ -1,112 +1,17 @@
-"""Shuffle-elimination join strategies for corpus-scale tables.
+"""Skewed-key detection for corpus-scale tables.
 
-Two techniques the 100 TB plan leans on, packaged as reusable operators
-and plan-gated by tests (tests/test_scalejoin.py):
-
-* **Bucketed co-located join** — both tables pre-bucketed on the join
-  key with the same bucket count: the join needs NO exchange at read
-  time (each bucket pairs 1:1).  This is what you do for the recurring
-  join (extraction results x per-host statistics, documents x
-  embeddings) whose shuffle would otherwise move the full fact table
-  every run.  With an Iceberg catalog the same declaration is the
-  table's bucket partition transform.
-
-* **Salted join** — a skewed join key (one host = 30% of rows) makes
-  one reducer the straggler no matter the parallelism.  The big side
-  gets a deterministic salt derived from a unique column; the small
-  side is replicated once per salt value; joining on (key, salt) splits
-  the hot key across ``salt_factor`` reducers.  Deterministic by
-  construction (no rand()): same input -> same partitioning -> stable
-  outputs under retries, which speculative execution requires.
+A skewed key (one host = 30% of rows) makes one reducer the straggler
+no matter the parallelism.  ``hot_keys`` finds the keys worth salting
+so a targeted split strategy salts ONLY them and leaves the long tail
+unsalted (``operators/extract.py`` salts hot hosts per url).
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    key: str,
-    buckets: int,
-    path: str,
-    sort_by_key: bool = True,
-) -> None:
-    """Persist ``df`` as a bucketed (+ optionally sorted) table.
-
-    Sorting within buckets lets the co-located join skip its sort too
-    (sort-merge join over pre-sorted bucket files reads both sides
-    streaming).
-    """
-    writer = (
-        df.write.mode("overwrite")
-        .option("path", path)
-        .bucketBy(buckets, key)
-    )
-    if sort_by_key:
-        writer = writer.sortBy(key)
-    writer.saveAsTable(table_name)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str
-) -> DataFrame:
-    """Join two same-bucketed tables on their bucket key — Catalyst
-    plans this without any Exchange (verified by the plan gate)."""
-    return spark.table(left_table).join(spark.table(right_table), key)
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    salt_source: str,
-    salt_factor: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe equi-join: salt the big side, replicate the small side.
-
-    ``salt_source``: a column of the big side with per-row diversity
-    (a unique id / url) — the salt is ``xxhash64(salt_source) %
-    salt_factor``, deterministic across retries.  The small side grows
-    ``salt_factor``x, so this is for genuinely small-vs-huge joins where
-    broadcast is ruled out by the small side not fitting in memory but
-    the hot-key reducer is the bottleneck.  Result columns match the
-    plain join (salt dropped).
-
-    Only big-side-preserving join types are supported: with the small
-    side replicated, ``right``/``full`` would emit one unmatched row
-    PER SALT REPLICA (plus null rows for matched keys' unused salts) —
-    not the plain-join result.  Deduplicate the small side first if you
-    need outer semantics.
-    """
-    if salt_factor < 1:
-        raise ValueError("salt_factor must be >= 1")
-    allowed = {"inner", "left", "leftouter", "left_outer",
-               "left_semi", "leftsemi", "left_anti", "leftanti"}
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_join supports {sorted(allowed)} — '{how}' would "
-            "multiply unmatched small-side rows by salt_factor"
-        )
-    if "_salt" in big.columns or "_salt" in small.columns:
-        raise ValueError(
-            "input already has a '_salt' column; rename it before "
-            "salted_join (it would be overwritten and then dropped)"
-        )
-    salted_big = big.withColumn(
-        "_salt",
-        F.pmod(F.xxhash64(F.col(salt_source)), F.lit(salt_factor)).cast(
-            "int"
-        ),
-    )
-    salts = F.array(*[F.lit(i) for i in range(salt_factor)])
-    replicated = small.withColumn("_salt", F.explode(salts))
-    return salted_big.join(replicated, [on, "_salt"], how).drop("_salt")
 
 
 def hot_keys(

@@ -38,7 +38,6 @@ from typing import Iterator, List, Tuple
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     LongType,
@@ -48,6 +47,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..functions.assemble import PAGE_SEPARATOR
 from ..functions.refparse import EOS_TOKEN
 from ..operators.decode import PDF_MAGIC
 
@@ -292,14 +292,6 @@ def build_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(_build_rows, schema=CORPUS_SCHEMA)
 
 
-def payload_type_col() -> F.Column:
-    """'pdf' | 'html' from the binary payload magic, JVM-side (no UDF)."""
-    return F.when(
-        F.substring(F.col("html"), 1, len(PDF_MAGIC)) == F.lit(PDF_MAGIC),
-        F.lit("pdf"),
-    ).otherwise(F.lit("html"))
-
-
 # The greedy-paragraph-fold CTE chain (see extraction_metrics_oracle's
 # docstring for the recursion argument) — shared by every oracle that
 # needs per-doc paragraph counts.
@@ -488,7 +480,6 @@ def raw_output_oracle() -> str:
     including EOS-filtered pages (reference S8/F4 semantics: raw keeps
     what the incomplete-page filter drops).
     """
-    from ..operators.extract import PAGE_SEPARATOR
     from ..functions.refparse import EOS_TOKEN as _EOS
 
     title = (
@@ -698,7 +689,6 @@ def flagship_oracle() -> str:
     escape arithmetic in SQL is high fragility for a column pytest
     already covers byte-exactly (``tests/test_extract_pipeline.py``).
     """
-    from ..operators.extract import PAGE_SEPARATOR
 
     return f"""{_PARAS_CTES},
 {_PTXT_CTES}

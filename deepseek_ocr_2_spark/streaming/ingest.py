@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.extract import EXTRACT_SCHEMA, ExtractConfig, make_extract_kernel
+from ..operators.extract import ExtractConfig, extract_pages
 from ..sources.corpus import CORPUS_SCHEMA
 
 
@@ -117,13 +117,10 @@ def read_page_stream(spark: SparkSession, drop_dir: str) -> DataFrame:
 def extract_stream(pages: DataFrame, cfg: Optional[ExtractConfig] = None) -> DataFrame:
     """Streaming flavor of ``extract_pages``: same kernel, same schema.
 
-    No pre-repartition: micro-batches are already file-sized; the
-    kernel routes HTML/PDF rows identically to the batch path, so
+    No pre-repartition: micro-batches are already file-sized, and the
     per-url output bytes match the batch pipeline exactly.
     """
-    cfg = cfg or ExtractConfig()
-    narrow = pages.select("url", "html", "lang")
-    return narrow.mapInPandas(make_extract_kernel(cfg), schema=EXTRACT_SCHEMA)
+    return extract_pages(pages, cfg, repartition=False)
 
 
 def start_extraction_stream(

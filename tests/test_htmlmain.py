@@ -153,3 +153,24 @@ def test_data_star_attrs_do_not_mark_boilerplate():
     html2 = f'<div id="cookie-banner"><p>{body}</p></div>'
     text2, _ = extract_main_content(html2)
     assert body not in text2
+
+
+class TestSelfClosingTags:
+    """``/>`` is not a self-close: the tag opens like a start tag (HTML5
+    ignores the flag on non-void elements).  Pinned as-is."""
+
+    def test_br_and_p_still_split_blocks(self):
+        blocks = parse_blocks("<div>one<br/>two<p/>three</div>")
+        assert [(b.tag, b.text) for b in blocks] == [
+            ("div", "one"), ("br", "two"), ("p", "three")
+        ]
+
+    def test_self_closed_script_swallows_the_rest(self):
+        first = "x" * 40
+        html = (
+            f"<p>{first}</p><script src=x.js/>"
+            "<p>main text that is long enough here</p>"
+        )
+        text, spans = extract_main_content(html)
+        assert text == first
+        assert [s["text"] for s in spans] == [first]

@@ -55,13 +55,9 @@ def test_token_count_prunes_to_two_columns(spark):
 
 
 def test_extract_fanout_knob_partition_counts(spark):
-    """Find 4 (r07): the payload-exchange partition count is ONE wave at
-    the session parallelism by default (unchanged r06 behavior — on
-    oversubscribed hosts fan-out measured as a pure per-task-overhead
-    loss), and the opt-in ``buckets_per_partition`` knob fans a
-    many-bucket config out to ``num_buckets // knob`` partitions for
-    dedicated-core clusters where bucket-assignment skew sets the
-    stage wall."""
+    """The payload-exchange partition count is ONE wave at the session
+    parallelism, capped at the bucket count (on oversubscribed hosts a
+    multi-wave fan-out measured as a pure per-task-overhead loss)."""
     pages = C.build_corpus(spark, SF_TINY)
     shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
@@ -74,18 +70,10 @@ def test_extract_fanout_knob_partition_counts(spark):
         return int(m.group(1))
 
     base = dict(static_hot_hosts=("big.example-news.com",))
-    # default: min(num_buckets, shuffle_parts) — exactly the r06 shape
     assert repart_n(ExtractConfig(num_buckets=1024, **base)) == min(
         1024, shuffle_parts
     )
-    # knob: >= num_buckets // knob partitions, still capped at buckets
-    assert repart_n(
-        ExtractConfig(num_buckets=1024, buckets_per_partition=16, **base)
-    ) == min(1024, max(shuffle_parts, 64))
-    # tiny bucket counts are never fanned past the bucket count
-    assert repart_n(
-        ExtractConfig(num_buckets=4, buckets_per_partition=16, **base)
-    ) == 4
+    assert repart_n(ExtractConfig(num_buckets=4, **base)) == min(4, shuffle_parts)
 
 
 def test_extract_shuffles_payload_exactly_once_and_narrow(spark):

@@ -1,82 +1,10 @@
-"""Shuffle-elimination join strategies: bucketed co-located joins must
-plan with zero exchanges; salted joins must match plain-join results on
-skewed keys while splitting the hot key across reducers."""
+"""Skewed-key detection: ``hot_keys`` finds exactly the giant key."""
 
 from __future__ import annotations
-
-import pytest
 
 from pyspark.sql import functions as F
 
 from deepseek_ocr_2_spark.operators import scalejoin as SJ
-
-from .conftest import SF_SMALL, formatted_plan
-
-
-def test_bucketed_join_plans_without_exchange(spark, tmp_path):
-    orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
-    lineitem = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet").select(
-        F.col("l_orderkey").alias("o_orderkey"), "l_quantity"
-    )
-    SJ.write_bucketed(
-        orders, "t_orders_b", "o_orderkey", 8, str(tmp_path / "ob")
-    )
-    SJ.write_bucketed(
-        lineitem, "t_lineitem_b", "o_orderkey", 8, str(tmp_path / "lb")
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = SJ.bucketed_join(
-            spark, "t_orders_b", "t_lineitem_b", "o_orderkey"
-        )
-        tree = formatted_plan(joined).split("== Physical Plan ==")[-1].split(
-            "\n\n(1)"
-        )[0]
-        assert "Exchange" not in tree, tree  # co-located: no shuffle
-        # result parity with the plain (shuffling) join
-        plain = orders.join(lineitem, "o_orderkey").count()
-        assert joined.count() == plain
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_lineitem_b")
-
-
-def test_salted_join_matches_plain_join_on_skewed_key(spark):
-    # 90% of the big side shares one key — the classic straggler shape
-    big = spark.range(0, 5000).select(
-        F.when(F.col("id") % 10 < 9, F.lit("hot"))
-        .otherwise(F.concat(F.lit("k"), (F.col("id") % 10).cast("string")))
-        .alias("k"),
-        F.col("id").alias("row_id"),
-    )
-    small = spark.createDataFrame(
-        [("hot", 1), ("k9", 2), ("missing", 3)], "k string, v int"
-    )
-    plain = {
-        (r.k, r.row_id, r.v)
-        for r in big.join(small, "k").collect()
-    }
-    salted = {
-        (r.k, r.row_id, r.v)
-        for r in SJ.salted_join(big, small, "k", "row_id", 8).collect()
-    }
-    assert salted == plain and len(salted) == 5000 * 9 // 10 + 500
-    # the hot key really splits: its rows land in >1 salt bucket
-    n_salts = (
-        big.filter(F.col("k") == "hot")
-        .select(F.pmod(F.xxhash64("row_id"), F.lit(8)).alias("s"))
-        .distinct()
-        .count()
-    )
-    assert n_salts > 1
-
-
-def test_salted_join_validates_factor(spark):
-    df = spark.range(1).select(F.lit("a").alias("k"), "id")
-    with pytest.raises(ValueError):
-        SJ.salted_join(df, df, "k", "id", 0)
 
 
 def test_hot_keys_detects_the_giant(spark):
@@ -88,18 +16,3 @@ def test_hot_keys_detects_the_giant(spark):
     hot = SJ.hot_keys(df, "host", threshold=100)
     assert hot == ["giant"]
 
-
-def test_salted_join_rejects_small_side_outer_types(spark):
-    df = spark.range(2).select(F.lit("a").alias("k"), "id")
-    with pytest.raises(ValueError, match="salted_join supports"):
-        SJ.salted_join(df, df.select("k"), "k", "id", 4, how="right")
-    with pytest.raises(ValueError, match="salted_join supports"):
-        SJ.salted_join(df, df.select("k"), "k", "id", 4, how="full")
-
-
-def test_salted_join_rejects_salt_column_collision(spark):
-    df = spark.range(2).select(
-        F.lit("a").alias("k"), F.lit(1).alias("_salt"), "id"
-    )
-    with pytest.raises(ValueError, match="_salt"):
-        SJ.salted_join(df, df.select("k"), "k", "id", 4)

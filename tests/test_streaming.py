@@ -44,6 +44,30 @@ def test_stream_drains_drop_dir_and_matches_batch(spark, tmp_path, corpus_df):
     assert got == want  # streaming output byte-identical to batch
 
 
+def test_stream_keeps_raw_output_column(spark, tmp_path, corpus_df):
+    drop = str(tmp_path / "drop")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    corpus_df.limit(120).write.mode("overwrite").parquet(drop)
+    cfg = ExtractConfig(
+        num_buckets=8, hot_host_threshold=10**9, include_raw_output=True
+    )
+
+    _await(ingest.start_extraction_stream(spark, drop, out, ckpt, cfg))
+
+    res = spark.read.parquet(out)
+    assert "raw_output" in res.columns
+    got = {r.url: (r.extracted_text, r.raw_output) for r in res.collect()}
+    want = {
+        r.url: (r.extracted_text, r.raw_output)
+        for r in extract_pages(
+            spark.read.parquet(drop), cfg, repartition=False
+        ).collect()
+    }
+    assert got == want
+    assert any(raw is not None for _, raw in got.values())  # PDF rows
+
+
 def test_stream_incremental_topup_is_exactly_once(spark, tmp_path, corpus_df):
     drop = str(tmp_path / "drop")
     out = str(tmp_path / "out")

@@ -66,6 +66,21 @@ class TestRollingHash:
     def test_short_doc(self):
         assert rolling_hashes("ab", window=4) == []
 
+    def test_long_input_matches_definition(self):
+        # > 2,048 windows, codepoints from ASCII up to the astral planes
+        import random
+
+        rng = random.Random(20261017)
+        pool = "abc xyz\n" + "éß中文" + "".join(map(chr, (0x1F600, 0x10FFFF)))
+        text = "".join(rng.choice(pool) for _ in range(3000))
+        w, base, mod = 64, 257, (1 << 61) - 1
+        want = [
+            sum(ord(text[i + j]) * pow(base, w - 1 - j, mod) for j in range(w)) % mod
+            for i in range(len(text) - w + 1)
+        ]
+        assert len(want) > 2048
+        assert rolling_hashes(text) == want
+
     def test_winnow_subset(self):
         hs = rolling_hashes("the quick brown fox jumps over the lazy dog" * 3, window=8)
         fp = winnow(hs, w=4)
