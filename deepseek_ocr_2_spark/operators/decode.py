@@ -40,6 +40,10 @@ PDF_MAGIC = b"%PDF-STUB1\n"
 # ceiling; default micro-batch budget mirrors it.
 DEFAULT_MAX_BATCH_VISUAL_TOKENS = 100 * 1120
 
+# Largest accepted page side: Spark's IntegerType range, which the
+# pixel bboxes of an in-range (0-999) box then also fit.
+MAX_PAGE_DIM = 2**31 - 1
+
 
 @dataclass(frozen=True)
 class PageTask:
@@ -59,12 +63,29 @@ class PageTask:
 DecodeBatchFn = Callable[[Sequence[PageTask]], List[str]]
 
 
+def _page_dim(p: Dict, key: str, i: int) -> int:
+    """A page dimension in ``[1, MAX_PAGE_DIM]`` pixels, else ``ValueError``.
+
+    The bound keeps the tile cost model total: a zero height on a wide
+    page divides by zero, and a ratio past float range overflows.
+    """
+    try:
+        dim = int(p[key])
+    except (OverflowError, ValueError) as exc:  # inf, nan, non-numeric
+        raise ValueError(f"page {i}: {key}: {exc}") from exc
+    if not 1 <= dim <= MAX_PAGE_DIM:
+        raise ValueError(f"page {i}: {key} out of range")
+    return dim
+
+
 def parse_pdf_payload(blob: bytes) -> List[PageTask]:
     """``%PDF-STUB1`` payload -> page tasks (url filled by the caller).
 
-    Raises ``ValueError`` on any malformed page (non-string raw_output,
-    missing/non-numeric dims) so the caller can emit a failure row —
-    malformed payloads must never escape as task-killing TypeErrors.
+    Raises ``ValueError`` on a malformed body or page (not a JSON
+    object, nested past the recursion limit, non-string raw_output, a
+    dim outside ``[1, MAX_PAGE_DIM]``) and ``KeyError`` on a missing key,
+    so the caller can emit a failure row — malformed payloads must
+    never escape as task-killing errors.
     """
     if not blob.startswith(PDF_MAGIC):
         raise ValueError("not a stub PDF payload")
@@ -72,6 +93,10 @@ def parse_pdf_payload(blob: bytes) -> List[PageTask]:
         doc = json.loads(blob[len(PDF_MAGIC):].decode("utf-8"))
     except UnicodeDecodeError as exc:
         raise ValueError(f"undecodable payload body: {exc}") from exc
+    except RecursionError as exc:
+        raise ValueError("payload body nests too deep") from exc
+    if not isinstance(doc, dict):
+        raise ValueError(f"payload body is {type(doc).__name__}")
     tasks = []
     for i, p in enumerate(doc.get("pages", [])):
         raw = p["raw_output"]
@@ -81,8 +106,8 @@ def parse_pdf_payload(blob: bytes) -> List[PageTask]:
             PageTask(
                 url="",
                 page_index=i,
-                width=int(p["width"]),
-                height=int(p["height"]),
+                width=_page_dim(p, "width", i),
+                height=_page_dim(p, "height", i),
                 payload={"raw_output": raw},
             )
         )

@@ -133,6 +133,11 @@ class ExtractConfig:
     include_raw_output: bool = False
 
 
+# Output rows per frame the kernel yields once PDF rows flow.  Bounds
+# the spans-heavy pandas/Arrow copies of a batch: one frame per
+# ~1000-doc PDF batch measured ~65 MB more peak RSS over 4 workers.
+PDF_FRAME_ROWS = 256
+
 _COLUMNS = (
     "url", "extracted_text", "spans", "lang", "payload_type",
     "total_pages", "failed_pages", "est_visual_tokens", "ok", "error",
@@ -142,7 +147,7 @@ _COLUMNS = (
 class _Out:
     """Columnar accumulator: one list per output column.
 
-    Building 10 parallel lists and one dict-of-lists DataFrame per batch
+    Building 10 parallel lists and one dict-of-lists DataFrame per frame
     is ~2x faster than a list of 10-key row dicts through
     ``pd.DataFrame(rows)`` — this wrapper cost was half the kernel time
     at bench scale.
@@ -187,15 +192,16 @@ def _extract_html_row(out: _Out, url: str, payload: bytes, lang) -> None:
     out.add(url, text, spans, lang, "html", 1, 0, 0, True, None)
 
 
-def _extract_pdf_rows(
-    out: _Out, rows: List[tuple], cfg: ExtractConfig
-) -> None:
-    """Decode + postprocess a batch of PDF docs; one output row per doc.
+def _extract_pdf_rows(rows: List[tuple], cfg: ExtractConfig) -> Iterator[tuple]:
+    """Decode + postprocess a batch of PDF docs; yields one ``_Out.add``
+    argument tuple per doc, in row order.
 
     All pages of every doc in the batch are flattened into one task list
     and cost-packed together, so decode batches stay full even when docs
     are short — the Spark analog of vLLM continuous batching across
-    requests (``engine/inference.py:390-414``).
+    requests (``engine/inference.py:390-414``).  Each doc's pages are
+    released once its row is built, so the caller can flush rows in
+    frames and keep the batch's peak memory near one frame's worth.
     """
     # Docs are tracked by ROW index, not url: the input table does not
     # guarantee url uniqueness (re-crawls), and keying by url would
@@ -221,14 +227,14 @@ def _extract_pdf_rows(
                 )
             )
 
-    decoded = decode_pages(tasks, cfg.decode_batch, cfg.max_batch_visual_tokens)
-    for task, raw in decoded:
+    for task, raw in decode_pages(tasks, cfg.decode_batch, cfg.max_batch_visual_tokens):
         doc_meta[int(task.url)]["pages"].append((task, raw))
+    del tasks  # doc_meta now holds the only reference to each page
 
     for ridx, (url, payload, lang) in enumerate(rows):
-        meta = doc_meta[ridx]
+        meta = doc_meta.pop(ridx)
         if meta["error"] is not None:
-            out.add(
+            yield (
                 url, None, [], lang, "pdf", 0, 0, 0, False,
                 f"payload_parse: {meta['error']}",
             )
@@ -254,7 +260,7 @@ def _extract_pdf_rows(
                 e["page_index"] = task.page_index
                 spans.append(e)
         ok = bool(markdowns) or not pages
-        out.add(
+        yield (
             url,
             join_pages(markdowns) if ok else None,
             spans,
@@ -265,7 +271,7 @@ def _extract_pdf_rows(
             est_tokens,
             ok,
             None if ok else "no_complete_pages",
-            raw=join_pages(raws) if raws else None,
+            join_pages(raws) if raws else None,
         )
 
 
@@ -287,8 +293,11 @@ def make_extract_kernel(cfg: ExtractConfig):
                     pdf_rows.append((url, payload, lang))
                 else:
                     _extract_html_row(out, url, payload, lang)
-            if pdf_rows:
-                _extract_pdf_rows(out, pdf_rows, cfg)
+            for row in _extract_pdf_rows(pdf_rows, cfg):
+                if len(out) >= PDF_FRAME_ROWS:
+                    yield out.frame()
+                    out = _Out(include_raw=cfg.include_raw_output)
+                out.add(*row)
             if len(out):
                 yield out.frame()
 
@@ -339,19 +348,28 @@ def extract_pages(
     reads.  ``repartition=False`` skips host keying and the exchange:
     the kernel is a pure function of the row, so per-url output is the
     same, and a stream's micro-batches are already file-sized.
+
+    The payload exchange has ``min(cfg.num_buckets, defaultParallelism)``
+    partitions, so the kernel stage runs as one task per core in one
+    wave (and ``run_extraction`` writes one file per task).
+    ``spark.sql.shuffle.partitions`` does not size it.
+    ``defaultParallelism`` is ``spark.default.parallelism`` when that is
+    set, else the total executor core count when the job is planned;
+    under dynamic allocation set ``spark.default.parallelism`` to the
+    core count the stage should fan out to.
     """
     cfg = cfg or ExtractConfig()
     if repartition:
-        # one task wave at the session parallelism: a multi-wave
-        # fan-out measured as a 4-8% per-task-overhead loss on
-        # shared-CPU hosts
-        shuffle_parts = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+        # one task wave: each Python task pays a fixed Arrow-boundary
+        # cost (~0.12-0.15 s per task measured on 4 cores), so a
+        # second wave costs more than the balance it buys
+        parts = min(
+            cfg.num_buckets, df.sparkSession.sparkContext.defaultParallelism
         )
         narrow = (
             with_partition_key(df, cfg)
             .select("url", "html", "lang", "bucket")
-            .repartition(min(cfg.num_buckets, shuffle_parts), "bucket")
+            .repartition(parts, "bucket")
             .drop("bucket")
         )
     else:

@@ -5,12 +5,18 @@ from __future__ import annotations
 
 import json
 
+import pandas as pd
 import pytest
 
 from deepseek_ocr_2_spark.functions.assemble import PAGE_SEPARATOR, process_page
 from deepseek_ocr_2_spark.functions.htmlmain import extract_main_content
 from deepseek_ocr_2_spark.functions.refparse import has_eos
-from deepseek_ocr_2_spark.operators.extract import ExtractConfig, extract_pages
+from deepseek_ocr_2_spark.operators.extract import (
+    PDF_FRAME_ROWS,
+    ExtractConfig,
+    extract_pages,
+    make_extract_kernel,
+)
 from deepseek_ocr_2_spark.operators.decode import (
     PageTask,
     pack_micro_batches,
@@ -127,6 +133,32 @@ def test_micro_batch_packing_bounds_cost():
     assert flat == [t.url for t in tasks]
 
 
+def test_kernel_frames_are_bounded_and_row_identical():
+    """Once PDF rows flow the kernel yields frames of at most
+    PDF_FRAME_ROWS rows, and the rows equal those of each row run alone."""
+    n = 2 * PDF_FRAME_ROWS + 3
+    payloads = [
+        C.render_pdf_payload(i, f"Heading {i}\n\nBody text {i}.\n\nMore {i}.")
+        for i in range(n)
+    ] + [b"<html><body><p>" + b"plain words " * 20 + b"</p></body></html>"]
+    frame = pd.DataFrame({
+        "url": [f"u{i}" for i in range(len(payloads))],
+        "html": payloads,
+        "lang": ["en"] * len(payloads),
+    })
+    kernel = make_extract_kernel(ExtractConfig(include_raw_output=True))
+    frames = list(kernel(iter([frame])))
+    assert len(frames) > 2
+    assert max(len(f) for f in frames) <= PDF_FRAME_ROWS
+    alone = [f for i in range(len(frame)) for f in kernel(iter([frame.iloc[i:i + 1]]))]
+
+    def records(fs):
+        out = pd.concat(fs, ignore_index=True).sort_values("url")
+        return out.to_dict("records")
+
+    assert records(frames) == records(alone)
+
+
 def test_parse_pdf_payload_rejects_garbage():
     with pytest.raises(ValueError):
         parse_pdf_payload(b"<html>not a pdf</html>")
@@ -229,6 +261,17 @@ def test_pathless_and_uppercase_scheme_urls_get_real_hosts(spark):
     assert hosts["https://q.example.com?x=1"] == "q.example.com"
 
 
+# stub-PDF bodies that each once killed the task instead of failing the row
+MALFORMED_PDF_BODIES = [
+    b"[1,2]",
+    b'"x"',
+    b'{"pages": [{"width": Infinity, "height": 1650, "raw_output": "a"}]}',
+    b'{"pages":' + b"[" * 100_000,
+    b'{"pages": [{"width": 1275, "height": 0, "raw_output": "a"}]}',
+    b'{"pages": [{"width": 1' + b"0" * 400 + b', "height": 1650, "raw_output": "a"}]}',
+]
+
+
 def test_malformed_pdf_pages_become_failure_rows(spark):
     import json as j
 
@@ -238,18 +281,20 @@ def test_malformed_pdf_pages_become_failure_rows(spark):
         {"pages": [{"width": 800, "height": 600, "raw_output": None}]}
     ).encode()
     bad2 = C.PDF_MAGIC + b"\xff\xfe not json"
+    bad = [bad1, bad2] + [C.PDF_MAGIC + b for b in MALFORMED_PDF_BODIES]
     schema = StructType([
         StructField("url", StringType()),
         StructField("html", BinaryType()),
         StructField("lang", StringType()),
     ])
     df = spark.createDataFrame(
-        [("https://m.org/1", bad1, "en"), ("https://m.org/2", bad2, "en")],
+        [(f"https://m.org/{i}", p, "en") for i, p in enumerate(bad, 1)],
         schema,
     )
     rows = {r.url: r for r in extract_pages(
         df, ExtractConfig(num_buckets=2, hot_host_threshold=99), repartition=False
     ).collect()}
+    assert sorted(rows) == sorted(f"https://m.org/{i}" for i in range(1, len(bad) + 1))
     assert all(not r.ok for r in rows.values())
     assert all(r.error.startswith("payload_parse") for r in rows.values())
 

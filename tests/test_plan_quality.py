@@ -55,11 +55,13 @@ def test_token_count_prunes_to_two_columns(spark):
 
 
 def test_extract_fanout_knob_partition_counts(spark):
-    """The payload-exchange partition count is ONE wave at the session
-    parallelism, capped at the bucket count (on oversubscribed hosts a
-    multi-wave fan-out measured as a pure per-task-overhead loss)."""
+    """The payload-exchange partition count is ONE wave at the core
+    count (``defaultParallelism``), capped at the bucket count: each
+    Python task pays a fixed Arrow-boundary cost, so a second wave is a
+    pure per-task-overhead loss.  ``spark.sql.shuffle.partitions`` does
+    not size it."""
     pages = C.build_corpus(spark, SF_TINY)
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    cores = spark.sparkContext.defaultParallelism
 
     def repart_n(cfg):
         plan = formatted_plan(extract_pages(pages, cfg))
@@ -70,10 +72,16 @@ def test_extract_fanout_knob_partition_counts(spark):
         return int(m.group(1))
 
     base = dict(static_hot_hosts=("big.example-news.com",))
-    assert repart_n(ExtractConfig(num_buckets=1024, **base)) == min(
-        1024, shuffle_parts
-    )
-    assert repart_n(ExtractConfig(num_buckets=4, **base)) == min(4, shuffle_parts)
+    assert repart_n(ExtractConfig(num_buckets=1024, **base)) == min(1024, cores)
+    assert repart_n(ExtractConfig(num_buckets=4, **base)) == min(4, cores)
+    assert repart_n(ExtractConfig(num_buckets=2, **base)) == 2
+
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    try:
+        assert repart_n(ExtractConfig(num_buckets=1024, **base)) == min(1024, cores)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def test_extract_shuffles_payload_exactly_once_and_narrow(spark):

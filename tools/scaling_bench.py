@@ -91,12 +91,11 @@ _CHILD = r"""
 import json, statistics, sys, time
 cpus, corpus_path = int(sys.argv[1]), sys.argv[2]
 from pyspark.sql import SparkSession, functions as F
-# 4 tasks per core: with exactly one task per core the stage wall is
-# the SLOWEST bucket (PDF docs cost ~4x HTML docs), so the hi level
-# pays a straggler penalty the lo level amortizes over its extra
-# waves and measured efficiency understates the plan.  2-4 waves is
-# the standard Spark sizing rule and mirrors the ceiling pool's
-# 64-chunks-over-N-procs granularity.
+# 4 * cpus shuffle partitions no longer fan out the kernel stage:
+# extract_pages sizes its payload exchange as min(num_buckets,
+# defaultParallelism), one task per core in one wave, whatever this
+# setting says.  (Round-6 numbers in BENCH/BASELINE.md were measured
+# when this setting gave the stage 4 tasks per core.)
 import os as _os
 _builder = (SparkSession.builder.master(f"local[{cpus}]")
          .config("spark.sql.shuffle.partitions", str(4 * cpus))
